@@ -110,20 +110,42 @@ object Frames {
     * thread (keeping its thread-locals — job description/group);
     * `a` runs on a scratch thread. Failures in either rethrow here.
     */
-  def overlap[A, B](a: => A)(b: => B): (A, B) = {
+  def overlap[A, B](a: => A)(b: => B): (A, B) =
+    overlapWithin(abandonAfter)(a)(b)
+
+  /** How long a failed `b` waits for chain `a` before giving up on it.
+    * Generous — a's jobs normally finish well inside it — but finite:
+    * a wedged `a` must not hang the driver with b's failure unseen. */
+  private val abandonAfter =
+    scala.concurrent.duration.FiniteDuration(5L, "minutes")
+
+  /** [[overlap]] with the post-failure wait on `a` bounded by `bound`;
+    * package-visible so the bound's contract can be tested quickly. */
+  private[graft] def overlapWithin[A, B](
+      bound: scala.concurrent.duration.FiniteDuration)(a: => A)(
+      b: => B): (A, B) = {
     if (overlapDisabled) { val ra = a; (ra, b) }
     else {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       val fa = Future(a)(scala.concurrent.ExecutionContext.global)
-      // If `b` throws, chain `a` must still be awaited before the
-      // failure propagates (r18 verdict): rethrowing immediately would
-      // leave a's jobs running orphaned against scratch dirs — and a's
-      // own failure would never be observed. `b`'s failure stays the
-      // primary one; a's (if any) is attached as suppressed.
+      // If `b` throws, chain `a` is still awaited before the failure
+      // propagates (r18 verdict): rethrowing immediately would leave
+      // a's jobs running orphaned against scratch dirs — and a's own
+      // failure would never be observed. The wait is bounded: past
+      // `bound`, `a` is abandoned with a note on b's failure. `b`'s
+      // failure stays the primary one; a's (if any) is suppressed.
       val rb = try b catch {
         case eb: Throwable =>
-          try Await.result(fa, Duration.Inf) catch {
+          try Await.result(fa, bound) catch {
+            case _: java.util.concurrent.TimeoutException =>
+              eb.addSuppressed(new IllegalStateException(
+                s"overlap: chain a abandoned, still running $bound " +
+                  "after chain b failed"))
+            case ie: InterruptedException =>
+              // the wait was interrupted: keep the caller's flag set
+              Thread.currentThread().interrupt()
+              eb.addSuppressed(ie)
             case ea: Throwable if ea ne eb => eb.addSuppressed(ea)
           }
           throw eb

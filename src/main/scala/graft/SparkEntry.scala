@@ -4,7 +4,7 @@ import graft.functions.{TextAnalysis => TA, TextFunctions => TF, VectorFunctions
 import graft.operators.{Align, Classify, Compliance, CountLog, Decontam, Dedup, Embed, Enrich, Health, MergeLog, Multimodal, Packing, Rag, Ruler, Sampling, Similarity, Sketches}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
 /** Driver contract — one `queries` entry (+ DuckDB `oracleSql`) per
   * implemented operator from SURVEY.md §2. Query bodies are thin: the
@@ -2847,46 +2847,40 @@ object SparkEntry {
       val base = scratchDir("graft_s19")
       val landing = s"$base/landing"
       val man = s"$base/manifest"
+      // the landing's writer contract: every drop is committed under
+      // this schema, so a tick reads with it instead of inferring it
+      val dropSchema = org.apache.spark.sql.types.StructType.fromDDL(
+        "doc_id LONG, n_chars LONG")
       val inB1 = Sampling.keyHash(col("doc_id"), "s19") <
         Sampling.threshold(0.5)
-      val b1 = d.filter(inB1).select(col("doc_id"), col("n_chars"))
-      val b2 = d.filter(!inB1).select(col("doc_id"), col("n_chars"))
+      val cols = dropSchema.map(f => col(f.name).cast(f.dataType))
+      val b1 = d.filter(inB1).select(cols: _*)
+      val b2 = d.filter(!inB1).select(cols: _*)
       def land(b: DataFrame, name: String): Unit =
         b.coalesce(1).write.mode("overwrite").parquet(s"$landing/$name")
-      def tick(id: Long): DataFrame = {
+      // A tick's report is ONE row of four longs that lives on the
+      // driver: the non-empty tick collects its aggregate, the empty
+      // tick builds its row with no Spark job at all. It is recorded in
+      // the manifest LAST, after the row is materialized, so the
+      // result never re-lists a landing that later ticks have moved.
+      def tick(id: Long): Row = {
         val nd = sources.FileManifest.newDrops(s, landing, man)
         val row =
-          if (nd.isEmpty)
-            s.range(1).select(lit(id).as("tick"), lit(0L).as("n_drops"),
-              lit(0L).as("n_rows"), lit(0L).as("sum_chars"))
-          else
-            sources.FileManifest.readDrops(s, landing, nd)
-              .agg(count(lit(1)).as("n_rows"),
-                sum(col("n_chars")).as("sum_chars"))
-              .select(lit(id).as("tick"),
-                lit(nd.size.toLong).as("n_drops"), col("n_rows"),
-                col("sum_chars"))
-        // materialize BEFORE recording: the returned plan must not
-        // re-list the landing after later ticks move the manifest.
-        // The tick's report is ONE row of four longs — collect it and
-        // return a literal frame (the empty branch's exact shape)
-        // instead of staging it to parquet: the stage write + read-back
-        // were two extra driver job round-trips per tick for a row that
-        // lives on the driver anyway (r19, guide §1.2; the manifest
-        // lifecycle — landing reads, manifest complement, record — is
-        // unchanged).
-        val v = row.collect()(0)
-        def l(i: Int) = (if (v.isNullAt(i)) lit(null) else lit(v.getLong(i)))
-          .cast("long")
+          if (nd.isEmpty) Row(id, 0L, 0L, 0L)
+          else {
+            val v = sources.FileManifest.readDrops(s, landing, nd, dropSchema)
+              .agg(count(lit(1)), sum(col("n_chars"))).collect()(0)
+            Row(id, nd.size.toLong, v.get(0), v.get(1))
+          }
         sources.FileManifest.record(s, man, nd, id)
-        s.range(1).select(l(0).as("tick"), l(1).as("n_drops"),
-          l(2).as("n_rows"), l(3).as("sum_chars"))
+        row
       }
-      land(b1.filter(col("doc_id") % 2 === 0), "d1_a")
-      land(b1.filter(col("doc_id") % 2 =!= 0), "d1_b")
+      // Each day's two drops go to distinct paths and neither is read
+      // before both commit, so they land concurrently (Frames.overlap).
+      Frames.overlap(land(b1.filter(col("doc_id") % 2 === 0), "d1_a"))(
+        land(b1.filter(col("doc_id") % 2 =!= 0), "d1_b"))
       val t1 = tick(1L)
-      land(b2, "d2_a")
-      land(b2, "d2_torn")
+      Frames.overlap(land(b2, "d2_a"))(land(b2, "d2_torn"))
       val hf = new org.apache.hadoop.fs.Path(landing)
         .getFileSystem(s.sessionState.newHadoopConf())
       hf.delete(
@@ -2894,7 +2888,11 @@ object SparkEntry {
         false): Unit
       val t2 = tick(2L)
       val t3 = tick(3L)
-      t1.unionByName(t2).unionByName(t3).orderBy(col("tick"))
+      // the three driver-held rows, already in tick order, as one
+      // local relation: draining it is a single job, with no sort
+      s.createDataFrame(java.util.Arrays.asList(t1, t2, t3),
+        org.apache.spark.sql.types.StructType.fromDDL(
+          "tick LONG, n_drops LONG, n_rows LONG, sum_chars LONG"))
     }),
 
     "s20_gzip_roundtrip" -> ((s, dir) => {

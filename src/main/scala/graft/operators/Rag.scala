@@ -207,11 +207,14 @@ object Rag {
     // `_SUCCESS`-gated text file via the FS API instead of a one-row
     // parquet (whose write was a Spark job and whose read was a head()
     // job on EVERY append/probe/compact — pure driver round-trip
-    // latency, r19 guide §1.2). errorifexists contract preserved.
+    // latency, r19 guide §1.2). errorifexists contract for a COMMITTED
+    // meta; a dir without `_SUCCESS` is a crashed save's torn leftover,
+    // reclaimed like a torn manifest segment (FileManifest.record).
     val f = SegmentFs.fs(spark, path)
     val dir = new org.apache.hadoop.fs.Path(s"$path/meta")
-    if (f.exists(dir))
+    if (f.exists(new org.apache.hadoop.fs.Path(dir, "_SUCCESS")))
       throw new org.apache.hadoop.fs.FileAlreadyExistsException(dir.toString)
+    if (f.exists(dir)) f.delete(dir, true): Unit
     val out = f.create(new org.apache.hadoop.fs.Path(dir, "buckets"), false)
     out.write(buckets.toString.getBytes("UTF-8")); out.close()
     f.create(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"), true).close()
@@ -341,6 +344,10 @@ object Rag {
   private def readMetaBuckets(spark: org.apache.spark.sql.SparkSession,
                               path: String): Int = {
     val f = SegmentFs.fs(spark, path)
+    // a meta dir without its marker is a crashed save: never read it
+    if (!f.exists(new org.apache.hadoop.fs.Path(s"$path/meta/_SUCCESS")))
+      throw new IllegalStateException(
+        s"BM25 index meta under $path is not committed (no _SUCCESS)")
     val in = f.open(new org.apache.hadoop.fs.Path(s"$path/meta/buckets"))
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
     finally in.close()

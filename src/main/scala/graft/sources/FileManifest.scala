@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** S19 — incremental file-discovery ingest: the FILE-LEVEL watermark of
   * every production lake pipeline. A landing root accrues immutable
@@ -20,7 +21,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Scale shape: listing is one FS namespace scan of drop dirs (not
   * data files); the manifest is a tiny text log; the data read
-  * touches only the new drops' files. Nothing corpus-sized moves.
+  * touches only the new drops' files, under the landing's schema
+  * (no inference job). Nothing corpus-sized moves.
+  *
+  * Driver round trips: a tick's own report (a few counts) is collected
+  * once and stays on the driver as a row — it is never staged or
+  * re-sorted through Spark. The jobs a tick starts are the new drops'
+  * aggregate and nothing else; `listDrops`/`processed`/`record` are
+  * FS-API calls.
   */
 object FileManifest {
 
@@ -76,12 +84,16 @@ object FileManifest {
                manifest: String): Seq[String] =
     listDrops(spark, landing).filterNot(processed(spark, manifest))
 
-  /** One DataFrame over exactly the given drops (empty schema-less
-    * reads are the caller's concern — pass a non-empty list).
+  /** One DataFrame over exactly the given drops, read with the
+    * landing's `schema` — the writer contract every drop is committed
+    * under, like a table's schema. Reading with it starts no Spark job:
+    * the schema-inferring read ran a footer-merge job per tick, a
+    * driver round trip that re-derived what the writer already fixed.
+    * Pass a non-empty list (an empty read is the caller's concern).
     */
-  def readDrops(spark: SparkSession, landing: String,
-                drops: Seq[String]): DataFrame =
-    spark.read.parquet(drops.map(d => s"$landing/$d"): _*)
+  def readDrops(spark: SparkSession, landing: String, drops: Seq[String],
+                schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(drops.map(d => s"$landing/$d"): _*)
 
   /** Record `drops` as absorbed, as the `_SUCCESS`-gated manifest
     * segment of tick `batchId`. Idempotent: a committed segment for

@@ -24,8 +24,27 @@ class FileManifestSpec extends SparkSpec {
     assert(FileManifest.listDrops(spark, landing) == Seq("a", "b"))
     val nd = FileManifest.newDrops(spark, landing, man)
     assert(nd == Seq("a", "b"))
-    assert(col0[Long](FileManifest.readDrops(spark, landing, nd)
-      .select($"v").orderBy($"v")) == Seq(1L, 2L, 3L))
+    // the schema-given read starts no Spark job (no inference) and
+    // returns exactly the rows the schema-inferring read returns
+    val jobs = new java.util.concurrent.atomic.AtomicLong(0L)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          ev: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(): Unit
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    val read = try {
+      val df = FileManifest.readDrops(spark, landing, nd,
+        org.apache.spark.sql.types.StructType.fromDDL("v LONG"))
+      org.apache.spark.graftbridge.Bus.drain(spark.sparkContext)
+      df
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(jobs.get == 0L, s"building the drop read ran ${jobs.get} jobs")
+    val inferred = spark.read.parquet(nd.map(d => s"$landing/$d"): _*)
+    val got = col0[Long](read.select($"v").orderBy($"v"))
+    assert(got == Seq(1L, 2L, 3L))
+    assert(got == col0[Long](inferred.select($"v").orderBy($"v")))
     FileManifest.record(spark, man, nd, 1L)
     assert(FileManifest.newDrops(spark, landing, man).isEmpty)
     // replay of the committed tick id: no-op, manifest unchanged

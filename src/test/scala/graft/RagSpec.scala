@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Rag, Similarity}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class RagSpec extends SparkSpec {
@@ -179,6 +180,35 @@ class RagSpec extends SparkSpec {
     val healed = rows(Rag.bm25Indexed(spark, idx, queries))
     assert(healed.exists(_.getAs[Long]("doc_id") == 9L),
       "recommitted batch must be visible")
+  }
+
+  test("bm25 meta: a torn meta dir never blocks the retried save and is never probed") {
+    val docs = Seq((1L, "a b a c"), (2L, "a d g"), (3L, "b b c"))
+      .toDF("doc_id", "text")
+    val queries = Seq(0 -> Seq("a", "c"))
+    val idx = Scratch.dir("bm25_torn_meta") + "/bm25"
+    // a save that crashed between the bucket file and its _SUCCESS
+    // marker, with a bucket count the retry will not use
+    val hf = new org.apache.hadoop.fs.Path(idx)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val out = hf.create(new org.apache.hadoop.fs.Path(s"$idx/meta/buckets"))
+    out.write("3".getBytes("UTF-8")); out.close()
+    val torn = intercept[IllegalStateException] {
+      Rag.bm25Indexed(spark, idx, queries)
+    }
+    assert(torn.getMessage.contains("not committed"), torn.getMessage)
+    // the retried save reclaims the torn dir and commits its own meta
+    Rag.saveBm25Index(docs, $"doc_id", $"text", idx,
+      buckets = 8, targetRows = 1000L, spread = 2)
+    def scores(df: DataFrame) = rows(df)
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Double]("score")).toMap
+    assert(scores(Rag.bm25Indexed(spark, idx, queries)) ==
+      scores(Rag.bm25(docs, $"doc_id", $"text", queries)))
+    // a COMMITTED meta keeps the errorifexists contract
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException] {
+      Rag.saveBm25Index(docs, $"doc_id", $"text", idx, buckets = 8,
+        targetRows = 1000L, spread = 2)
+    }
   }
 
   test("bm25 compaction: scores bit-identical, dirs collapse, appends keep working") {

@@ -1,6 +1,9 @@
 #!/bin/bash
-# r19 ABBA A/B runner: arm A = new behavior (g4 staging ON, v20 overlap ON,
-# d4/d22 candidate checkpoint ON), arm B = old behavior via the env escapes.
+# RECORD of the r19 measurement, kept for its numbers (OPTIMIZATION_r19.md);
+# g4 staging and v20 overlap, which it first A/B'd, were reverted since.
+# r19 ABBA A/B runner: arm A sets SPARK_GRAFT_CKPT_CANDS=1 (d4/d22 candidate
+# checkpoint ON); arm B sets SPARK_GRAFT_NOOVERLAP=1 (every Frames.overlap
+# runs its two chains sequentially). Those are the only two knobs it toggles.
 # Usage: ab_r19.sh <tag> <order: ABBA|BAAB> [queries...]
 # Writes one mins line per run to /tmp/ab_r19_<tag>.log
 set -u
@@ -15,7 +18,7 @@ run_arm() {
       sbt "runMain graft.Bench $QUERIES" 2>/dev/null | grep '"metric":"mins"' | tail -1 | sed "s/^/A /" >> "$LOG"
   else
     env SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
-      SPARK_GRAFT_NOSTAGE=1 SPARK_GRAFT_NOOVERLAP=1 \
+      SPARK_GRAFT_NOOVERLAP=1 \
       sbt "runMain graft.Bench $QUERIES" 2>/dev/null | grep '"metric":"mins"' | tail -1 | sed "s/^/B /" >> "$LOG"
   fi
 }
